@@ -493,23 +493,19 @@ object LlmExtra {
     * (×20 = 12.0M pairs, interleaved median-of-5 under 64 GiB) came
     * back hook 24.1 s vs star 32.3 s — a clear hook win, so the
     * crossover lies in (12M, 18M] and the default threshold is 15M,
-    * the midpoint of the TIGHTENED band in pair units. `spark.graft
-    * .ccAlgo=hook|star` forces either. Callers pass a materialized or
-    * cheap-to-rescan `pairs` (both call sites do: the persisted dedup
-    * pair list, the parquet-artifact-backed trade graph), so the
-    * dispatch count never re-runs an expensive pipeline. */
+    * the midpoint of the TIGHTENED band in pair units. Callers pass a
+    * materialized or cheap-to-rescan `pairs` (both call sites do: the
+    * persisted dedup pair list, the parquet-artifact-backed trade
+    * graph), so the dispatch count never re-runs an expensive
+    * pipeline. */
   private[graft] def componentsAuto(s: org.apache.spark.sql.SparkSession,
       pairs: org.apache.spark.sql.DataFrame,
-      dedupePerRound: Boolean = false): org.apache.spark.sql.DataFrame =
-    s.conf.getOption("spark.graft.ccAlgo") match {
-      case Some("star") => connectedComponentsStar(pairs)
-      case Some("hook") => connectedComponents(pairs, dedupePerRound)
-      case _ =>
-        val thresh = s.conf.getOption("spark.graft.ccAutoEdges")
-          .map(_.toLong).getOrElse(15000000L)
-        if (pairs.count() > thresh) connectedComponentsStar(pairs)
-        else connectedComponents(pairs, dedupePerRound)
-    }
+      dedupePerRound: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val thresh = s.conf.getOption("spark.graft.ccAutoEdges")
+      .map(_.toLong).getOrElse(15000000L)
+    if (pairs.count() > thresh) connectedComponentsStar(pairs)
+    else connectedComponents(pairs, dedupePerRound)
+  }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14 —

@@ -62,6 +62,29 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("graph loops: every round sits behind its per-round " +
+      "localCheckpoint, so the shipped plans carry no Join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      Aqe.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec => j.nodeName
+      }
+    // each loop's last state table is a checkpoint, so the edge join of
+    // every round is cut from the plan the query returns
+    for (key <- Seq("graph_pagerank", "graph_shortest_path",
+        "graph_label_propagation")) {
+      val df = q(key)
+      assert(joins(df).isEmpty, s"$key: ${df.queryExecution.executedPlan}")
+    }
+    // falsifiable: one round without its checkpoint shows the edge join
+    val oe = graft.ops.Graph.tradeGraph(spark, sf)
+    val labels = oe.select(col("src").as("node"), col("src").as("label"))
+      .distinct()
+    assert(joins(graft.ops.Graph.lpIterate(labels, oe)).nonEmpty)
+  }
+
   test("graph_label_propagation: community sizes partition the node set " +
       "and the output is deterministic") {
     val rows = q("graph_label_propagation").collect()

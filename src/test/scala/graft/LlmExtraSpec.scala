@@ -229,6 +229,19 @@ class LlmExtraSpec extends AnyFunSuite {
     assert(png.take(4).map(_ & 0xff).toSeq === Seq(0x89, 0x50, 0x4e, 0x47))
   }
 
+  test("multimodal image: pngBytes leaves the JVM-global ImageIO cache " +
+      "setting alone") {
+    // the memory-only stream cache is set once per partition by the
+    // codec seam; the per-row encoder must not flip process-wide state
+    // that any other ImageIO user in the JVM depends on
+    val saved = javax.imageio.ImageIO.getUseCache
+    try {
+      javax.imageio.ImageIO.setUseCache(true)
+      graft.ops.Multimodal.pngBytes(5L)
+      assert(javax.imageio.ImageIO.getUseCache)
+    } finally javax.imageio.ImageIO.setUseCache(saved)
+  }
+
   test("cluster cache: rewriting the documents table is NOT served from " +
       "the stale shared cluster table") {
     import spark.implicits._

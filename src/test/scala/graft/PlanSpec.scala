@@ -14,6 +14,47 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** Hot-KEY events fixture (deterministic, no RNG): ONE bot user
+    * (user_id 1) with nHot clicks spread over 300 days plus nHot/2
+    * interleaved views and nHot/50 purchases, next to background
+    * traffic from 1 000 normal users — the one oversized user
+    * partition the AQE skew-join test below needs. */
+  private def synthEvents(dir: String, nHot: Long): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    if (new java.io.File(s"$dir/events.parquet/_SUCCESS").isFile) return
+    val base = 1735689600000000L // 2025-01-01 UTC, micros
+    val span = 300L * 86400000000L
+    val hot = spark.range(nHot).map { i =>
+      // bot: clicks at even spacing over 300 days; every (nHot/50)th
+      // event is a purchase
+      val ts = base + i * (span / nHot)
+      val isPurch = nHot >= 50 && i % (nHot / 50) == (nHot / 50) - 1
+      (i.toLong, ts, 1L, if (isPurch) "purchase" else "click",
+        if (isPurch) 25.0 else 0.0)
+    }
+    // bot views interleaved between the clicks (distinct ids)
+    val hotViews = spark.range(nHot / 2).map { i =>
+      val ts = base + (2 * i + 1) * (span / nHot) - (span / nHot) / 2
+      (500000L + i, ts, 1L, "view", 0.0)
+    }
+    val bg = spark.range(50000).map { i =>
+      val ts = base + (i * 518400L + 7L) % span // co-prime stride
+      val uid = 2L + i % 1000
+      val kind = (i % 10) match {
+        case 0 => "purchase"; case 1 | 2 => "click"; case _ => "view"
+      }
+      (1000000L + i, ts, uid, kind, if (kind == "purchase") 10.0 else 0.0)
+    }
+    hot.union(hotViews).union(bg)
+      .toDF("event_id", "tsl", "user_id", "event_type", "value")
+      .select(col("event_id"), timestamp_micros(col("tsl")).as("ts"),
+        col("user_id"), col("event_type"), col("value"),
+        lit("{}").as("props"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+  }
+
   test("scan_projected: predicate pushdown + column pruning reach parquet") {
     val p = plan(q("scan_projected"))
     assert(p.contains("PushedFilters:") &&
@@ -329,19 +370,38 @@ class PlanSpec extends AnyFunSuite {
     // scale and ships nothing but doc_id — guide §2.5/§8), but the
     // exchange must sit BELOW the codec in the plan so no payload byte
     // ever crosses it, and no join may sneak in
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    // every hash exchange's input AND output schema is the bare id —
+    // the payload (generated above it) cannot cross a shuffle
+    def idOnlyHashExchanges(df: DataFrame): Boolean = {
+      val hash = Aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      hash.nonEmpty && hash.forall(e =>
+        e.child.output.map(_.name) == Seq("doc_id") &&
+          e.output.map(_.name) == Seq("doc_id"))
+    }
     for (key <- Seq("llm_multimodal_image", "llm_multimodal_audio")) {
-      val p = plan(q(key))
+      val df = q(key)
+      val p = plan(df)
       assert(!p.contains("Join"), s"$key: ${p.take(2000)}")
       assert("\\(\\d+\\) Exchange".r.findAllIn(p).size <= 2,
         s"$key: ${p.take(2000)}")
       assert("hashpartitioning".r.findAllIn(p).size <= 1,
         s"$key: ${p.take(2000)}")
-      // the hash exchange's input schema is the bare id — the payload
-      // (generated above it) cannot cross a shuffle
-      val hashIdx = p.indexOf("hashpartitioning(doc_id")
-      assert(hashIdx >= 0,
-        s"$key: id repartition missing: ${p.take(2000)}")
+      assert(idOnlyHashExchanges(df), s"$key: ${p.take(2000)}")
     }
+    // falsifiable: repartitioning the payload rows by doc_id puts a
+    // hash exchange over the whole media record, and the check rejects it
+    val docs = graft.ops.Tables.t(spark, sf, "documents")
+    val payloadShuffle = graft.ops.Multimodal.toPngMedia(docs).toDF()
+      .repartition(org.apache.spark.sql.functions.col("doc_id"))
+    assert(!idOnlyHashExchanges(payloadShuffle),
+      plan(payloadShuffle).take(2000))
   }
 
   test("win_share_of_total: one keyed shuffle, no self-join on the total") {
@@ -536,15 +596,15 @@ class PlanSpec extends AnyFunSuite {
       "100× answer the manual salt backstops") {
     // join_skew_salted is the MANUAL fallback; at production scale the
     // first answer is spark.sql.adaptive.skewJoin (round-12 verdict
-    // item 4). Pin that it actually fires: on the SkewRehearsal bot-
-    // user fixture, the plain fact ⋈ per-user-dim shuffle join's
+    // item 4). Pin that it actually fires: on the bot-user fixture
+    // (`synthEvents`), the plain fact ⋈ per-user-dim shuffle join's
     // executed plan must show the skew split (skew=true) when AQE
     // skew handling is forced with fixture-scaled thresholds — and
     // must NOT when skew handling is off (falsifiability control).
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_skewplan").toString
-    SkewRehearsal.synthEvents(spark, dir, 100000L)
+    synthEvents(dir, 100000L)
     // the dim is MATERIALIZED first (production reads it as a table):
     // OptimizeSkewedJoin only matches Sort(ShuffleQueryStage) directly
     // under the join on BOTH sides, so an inline aggregate between the
